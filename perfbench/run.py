@@ -58,17 +58,19 @@ NUMBER_COUNT_ROWS = 3_000_000
 # for every seed and the seed changes the weights, not the work
 GRID_SIDE = 14
 WORKLOADS = ("catalog", "firebird_apps")
-# untimed noop passes after the warm-up pass: the apps' times keep falling
-# for their first few invocations in a fresh JVM (number_count 1.3 s,
-# 1.1 s, 1.0 s; sssp 4.5 s, 3.5 s, 3.4 s), the catalog's do not
-EXTRA_WARMUP_PASSES = {"catalog": 0, "firebird_apps": 2}
+# untimed noop passes after the warm-up pass: times keep falling for the
+# first few invocations in a fresh JVM (number_count 1.3 s, 1.1 s, 1.0 s;
+# sssp 4.5 s, 3.5 s, 3.4 s; a catalog pass 9.1 s, then 6.1 s to 7.0 s)
+EXTRA_WARMUP_PASSES = {"catalog": 1, "firebird_apps": 2}
 # timed passes run until --seconds is spent and at least this many have
 # run, so every operation's best time is a min of three or more
 MIN_PASSES = 3
 PASS_ORDERS = 64
+# -Xms = -Xmx: a heap that grows with use made the apps 15 % slower, and
+# their times and peak RSS spread about 0.18 across seeds
 JVM_HEAP = "3g"
-# the JVM's deadline, counted from the end of the build: set-up, the
-# timed passes and shutdown
+# the run's deadline, counted from the end of the build: input
+# generation, set-up, the timed passes and shutdown
 RUN_TIMEOUT_S = 135
 BUILD_TIMEOUT_S = 850
 
@@ -272,11 +274,10 @@ def end_to_end(record, setup_s):
 
 def workload_figures(workload, record):
     """The figures each workload exists for, printed beside the metrics.
-    Per-operation times are the best of the run's passes. A latency
+    The apps' figures are medians over the run's passes. A latency
     percentile is printed only when at least 10 samples lie beyond it (a
     catalog pass gives len(CATALOG) samples)."""
     ops = [o for o in record["ops"] if o["error"] is None]
-    best = M.best_by_name(ops)
     if workload == "catalog":
         out = {"queries_timed": (len(ops), "count")}
         for name, q in (("query_p50_s", 0.5), ("query_p95_s", 0.95)):
@@ -285,8 +286,10 @@ def workload_figures(workload, record):
             except ValueError:
                 pass
         return out
-    return {"number_count_rows_per_s": (NUMBER_COUNT_ROWS / best["number_count"], "1/s"),
-            "sssp_s": (best["sssp"], "s")}
+    median = {name: statistics.median(o["wall_s"] for o in ops if o["name"] == name)
+              for name in ("number_count", "sssp")}
+    return {"number_count_rows_per_s": (NUMBER_COUNT_ROWS / median["number_count"], "1/s"),
+            "sssp_s": (median["sssp"], "s")}
 
 
 def per_layer(record, fail_ratio):
@@ -328,12 +331,28 @@ def entry_layers(rows):
 # ------------------------------------------------------------------ main
 
 def run_workload(args, classpath, run_dir, deadline):
-    """Start the JVM, generate the inputs while its session starts, hand it
-    the plan, wait for its record, and check the outputs."""
+    """Generate the inputs and the plan, run the JVM on them, wait for its
+    record, and check the outputs."""
     data_dir, out_dir, tmp_dir = run_dir / "data", run_dir / "out", run_dir / "tmp"
     for d in (data_dir, out_dir, tmp_dir, run_dir / "local"):
         d.mkdir(parents=True)
     plan_file, record_file = run_dir / "plan.json", run_dir / "record.json"
+    plan = {
+        "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
+        "trace": bool(args.trace), "data_dir": str(data_dir), "out_dir": str(out_dir),
+        "passes": pass_orders(args.workload, args.seed),
+        "extra_warmup_passes": EXTRA_WARMUP_PASSES[args.workload],
+        "min_passes": MIN_PASSES,
+    }
+    if args.workload == "firebird_apps":
+        grid = run_dir / "grid.parquet"
+        pq.write_table(grid_edges(args.seed, GRID_SIDE), grid)
+        plan.update(grid_path=str(grid), number_count_rows=NUMBER_COUNT_ROWS,
+                    number_count_seed=number_count_seed(args.seed))
+    else:
+        gen.write(data_dir, args.seed, SF)
+    plan_file.write_text(json.dumps(plan))
+
     cpus = len(os.sched_getaffinity(0))
     env = dict(os.environ, SPARK_LOCAL_DIRS=str(run_dir / "local"))
     cmd = (["java", f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", f"-Djava.io.tmpdir={tmp_dir}"]
@@ -344,34 +363,10 @@ def run_workload(args, classpath, run_dir, deadline):
     logs.mkdir(parents=True, exist_ok=True)
     jvm_log = logs / f"{args.workload}-{args.seed}-trace{args.trace}.log"
     with open(jvm_log, "w") as out:
-        proc = start_child(cmd, run_dir, out, env)
-        try:
-            plan = {
-                "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
-                "trace": bool(args.trace), "data_dir": str(data_dir), "out_dir": str(out_dir),
-                "passes": pass_orders(args.workload, args.seed),
-                "extra_warmup_passes": EXTRA_WARMUP_PASSES[args.workload],
-                "min_passes": MIN_PASSES,
-            }
-            if args.workload == "firebird_apps":
-                grid = run_dir / "grid.parquet"
-                pq.write_table(grid_edges(args.seed, GRID_SIDE), grid)
-                plan.update(grid_path=str(grid), number_count_rows=NUMBER_COUNT_ROWS,
-                            number_count_seed=number_count_seed(args.seed))
-            else:
-                gen.write(data_dir, args.seed, SF)
-            tmp = plan_file.with_suffix(".tmp")
-            tmp.write_text(json.dumps(plan))
-            tmp.rename(plan_file)
-        except BaseException:
-            stop_child(proc)
-            raise
-        code = wait_child(proc, deadline - time.time())
+        code = wait_child(start_child(cmd, run_dir, out, env), deadline - time.time())
     if code != 0 or not record_file.exists():
         fail(f"the benchmark JVM exited with {code}; see {jvm_log}")
     record = json.loads(record_file.read_text())
-    if args.raw:
-        shutil.copyfile(record_file, args.raw)
     return record, run_checks(record, data_dir)
 
 
@@ -382,7 +377,6 @@ def main():
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--record", help="also write the run's metrics and per-entry layers here")
-    ap.add_argument("--raw", help="also copy the JVM's raw record (spans, jobs, stages) here")
     args = ap.parse_args()
     # a terminated benchmark still stops and waits for its JVM (wait_child)
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
@@ -392,16 +386,16 @@ def main():
         fail(f"no engine sources next to {BENCH_DIR.name}/ (expected build.sbt and src/main/scala/graft)")
 
     classpath = build()
-    setup_t0 = time.time()
+    run_t0 = time.time()
     run_dir = STATE / f"run-{args.workload}-{args.seed}-{os.getpid()}"
     shutil.rmtree(run_dir, ignore_errors=True)
     try:
         record, failures = run_workload(args, classpath, run_dir,
-                                        setup_t0 + RUN_TIMEOUT_S + args.seconds)
+                                        run_t0 + RUN_TIMEOUT_S + args.seconds)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
-    # inputs generated, session created, warm-up pass done
-    setup_s = record["warm"] - setup_t0
+    # from JVM start until the session is created and the warm-up is done
+    setup_s = record["warm"] - record["jvm_start"]
 
     ops = record["ops"]
     bad = [o for o in ops if o["error"] is not None or o["name"] in failures]

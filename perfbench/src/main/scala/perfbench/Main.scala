@@ -17,10 +17,9 @@ import graft.apps.{NumberCount, ShortestPath}
   *
   * Usage: perfbench.Main <cpus> <warehouse dir> <plan.json> <record.json>
   *
-  * The session starts at once; the plan file, which run.py writes once it
-  * has generated the run's inputs from the seed, is awaited after that. It
-  * names the workload, the operation order of every pass, the input
-  * locations and the time budget.
+  * The plan file, which run.py writes after generating the run's inputs
+  * from the seed, names the workload, the operation order of every pass,
+  * the input locations and the time budget.
   * The engine is driven only through its public functions:
   * `SparkEntry.queries`, `NumberCount.genInts`/`runMapReduce`,
   * `ShortestPath.undirect`/`distributedSssp`/`dijkstra` and
@@ -45,7 +44,7 @@ object Main {
         .getOrCreate()
     }
     spark.sparkContext.setLogLevel("WARN")
-    val plan = spans.within("session", "await inputs")(awaitPlan(new File(planPath)))
+    val plan = json.readTree(new File(planPath))
     val outDir = plan.get("out_dir").asText
     val traced = plan.get("trace").asBoolean
     val passes = plan.get("passes").elements.asScala
@@ -188,17 +187,6 @@ object Main {
     } catch { case t: Throwable =>
       Map("name" -> op.name, "kind" -> "error", "error" -> t.toString)
     }
-
-  /** Waits for run.py to write the plan (it renames a finished file into
-    * place, so a visible file is complete). */
-  private def awaitPlan(f: File): JsonNode = {
-    val deadline = System.nanoTime() + 120L * 1000000000L
-    while (!f.exists()) {
-      if (System.nanoTime() > deadline) sys.error(s"no plan at $f")
-      Thread.sleep(5)
-    }
-    json.readTree(f)
-  }
 
   /** Listener delivery is asynchronous: run one sentinel job after the last
     * traced operation and wait until its end event has been delivered, so
